@@ -45,12 +45,7 @@ from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.cluster import connected_components, elect_keepers
 from deduplidog_spark.operators.exact import collapse_sha_reps
 from deduplidog_spark.operators.verify import verify_candidate_pairs
-
-_BAND_STAGE = {
-    "minhash": "minhash_bands",
-    "simhash": "simhash_bands",
-    "substring": "winnow_bands",
-}
+from deduplidog_spark.pipeline import BAND_STAGE, band_table, banded_scan
 
 # ingest-time audit flags that may exist on one side of a base/batch
 # union only; nothing downstream of the union reads them. Any OTHER
@@ -80,8 +75,7 @@ class BaseState:
     labels: DataFrame  # (fid, component)
     # sha-collapsed representative band rows (one per distinct sha) —
     # persisted by the full run / write_state so an append batch never
-    # re-aggregates the base band table; None for pre-round-3 snapshots
-    # (incremental_dedupe then falls back to a one-off base collapse)
+    # re-aggregates the base band table; None only in exact mode
     band_reps: DataFrame | None = None
 
 
@@ -124,55 +118,14 @@ def load_state(spark: SparkSession, cfg: DedupConfig) -> BaseState:
             )
         raise ValueError("incremental dedup needs a checkpoint target in cfg")
 
-    bands = rd(_BAND_STAGE[cfg.mode]) if cfg.mode in _BAND_STAGE else None
-    band_reps = None
-    if cfg.mode in _BAND_STAGE:
-        from pyspark.errors import AnalysisException
-
-        try:  # stage exists since round 3; older snapshots → fallback
-            band_reps = rd("band_reps")
-        except AnalysisException as e:
-            # ONLY a missing stage means "pre-round-3 snapshot" — any
-            # other failure (permissions, corrupt parquet, transient
-            # storage fault) must surface, not silently reinstate the
-            # per-batch base-wide aggregation the stage exists to avoid.
-            # Match the structured error class, not the message text
-            # (message formats change across Spark versions; a renamed
-            # message would turn a corrupt stage into a silent fallback).
-            get_cls = getattr(e, "getCondition", None) or e.getErrorClass
-            err = get_cls() or ""
-            if err.startswith(("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")):
-                band_reps = None
-            else:
-                raise
+    bands = band_reps = None
+    if cfg.mode in BAND_STAGE:
+        bands = rd(BAND_STAGE[cfg.mode])
+        band_reps = rd("band_reps")
     return BaseState(
         files=rd("files"), bands=bands, labels=rd("cc_labels"),
         band_reps=band_reps,
     )
-
-
-def _slim_bands(files_full: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Mode-specific slim band table for a batch — same columns as the
-    pipeline's checkpointed stage (pipeline.near_dup_edges)."""
-    if cfg.mode == "minhash":
-        sigs = mh.with_banded_signatures(files_full, cfg)
-        return sigs.select("fid", "sha", "size", "n_lines", "band_hashes")
-    if cfg.mode == "simhash":
-        sigs = sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg)
-        return sigs.select("fid", "sha", "size", "n_lines", "band_hashes", "simhash")
-    if cfg.mode == "substring":
-        fps = ss.with_fingerprints(files_full, cfg)
-        return fps.select("fid", "sha", "size", "n_lines", "band_hashes")
-    raise ValueError(f"_slim_bands: unsupported mode {cfg.mode!r}")
-
-
-def _collapse_reps(bands: DataFrame) -> DataFrame:
-    """One representative band row per distinct sha — the bootstrap/
-    fallback collapse; steady-state appends never run this (the
-    persisted band_reps stage + per-batch fresh reps carry the
-    invariant forward with no base-wide aggregation). Delegates to the
-    shared kernel so rep selection cannot diverge from the full run."""
-    return collapse_sha_reps(bands)
 
 
 def _explode(slim: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -307,9 +260,13 @@ def incremental_labels(
         F.col("component").alias("id_a"), F.col("fid").alias("id_b")
     )
     sub = connected_components(
-        # new edges touch >=1 batch fid and are canonical+unique; star
-        # edges are one row per base member of a touched component --
-        # disjoint and duplicate-free, so skip the edge dedup shuffle
+        # new edges are canonical and unique and star edges are one row
+        # per base member of a touched component, so the union is
+        # nearly duplicate-free: an exact-star new edge (center, member)
+        # can repeat a star edge when a touched component's id is that
+        # sha group's center. Hash-min labels do not depend on edge
+        # multiplicity, so skipping the dedup shuffle is safe; the rare
+        # duplicate only costs shuffle volume per CC round
         new_edges.union(star), max_iterations, assume_unique_edges=True,
     )
     updated = base_labels.join(sub, "fid", "left_anti").unionByName(sub)
@@ -320,32 +277,14 @@ def state_from_result(result, base_raw: DataFrame, cfg: DedupConfig) -> BaseStat
     """Build in-memory state from a completed ``pipeline.dedupe``
     result when no checkpoint target was configured (tests, notebook
     runs); production batches use ``load_state`` against the persisted
-    stages instead of recomputing base signatures here.
-
-    r6: the fused-scan pipeline hands back its MATERIALIZED band table
-    and rep table on the result (``DedupResult.bands``/``band_reps``),
-    so the common case reuses them directly — previously this rebuilt
-    the band table lazily from ``base_raw``, and every downstream
-    consumer of the state (the union verify table, the base rep
-    explode) re-paid the base signature UDF per reference."""
-    if cfg.mode in _BAND_STAGE and result.bands is not None:
-        return BaseState(
-            files=result.files,
-            bands=result.bands,
-            labels=result.clusters.select("fid", "component"),
-            band_reps=(
-                result.band_reps
-                if result.band_reps is not None
-                else _collapse_reps(result.bands)
-            ),
-        )
-    full = ingest(base_raw, cfg).withColumn("fid", F.concat_ws("/", "repo", "path"))
-    bands = _slim_bands(full, cfg) if cfg.mode in _BAND_STAGE else None
+    stages. The result already carries the materialized band table and
+    reps (``DedupResult.bands``/``band_reps``), so nothing is
+    recomputed; ``base_raw`` is not read."""
     return BaseState(
         files=result.files,
-        bands=bands,
+        bands=result.bands,
         labels=result.clusters.select("fid", "component"),
-        band_reps=_collapse_reps(bands) if bands is not None else None,
+        band_reps=result.band_reps,
     )
 
 
@@ -382,38 +321,29 @@ def incremental_dedupe(
         "fid", F.concat_ws("/", "repo", "path")
     )
     slim_cols = [c for c in new_full.columns if c != "content"]
-    comb = None
-    if cfg.mode == "minhash":
-        # fused batch scan (r6, mirrors pipeline.dedupe): ONE
-        # mapInPandas pass yields both the slim audit table and the
-        # band table as projections of a single materialization —
-        # previously new_files and new_slim were separate checkpoints,
-        # each pulling its own full ingest (+ signature) pass
-        comb = mh.banded_ingest_scan(new_raw, cfg).withColumn(
-            "fid", F.concat_ws("/", "repo", "path")
-        ).localCheckpoint(eager=False)
+    new_slim = None
+    if cfg.mode in BAND_STAGE:
+        # the pipeline's one scan (pipeline.banded_scan): the slim audit
+        # table and the band table are projections of a single lazy
+        # materialization of the batch
+        comb = banded_scan(new_raw, cfg).localCheckpoint(eager=False)
         new_files = comb.select(*slim_cols)
+        new_slim = band_table(comb, cfg)
     else:
         new_files = new_full.select(*slim_cols).localCheckpoint(eager=False)
 
     exact = incremental_exact_edges(new_files, state.files)
     dropped = None
-    new_slim = None
     reps = None
     if cfg.mode == "exact":
         edges = exact
-    elif cfg.mode in _BAND_STAGE:
+    elif cfg.mode in BAND_STAGE:
         if cfg.exact_verify and base_contents is None:
             raise ValueError(
                 "exact_verify needs base_contents (fid, content) for "
                 "new-vs-base pairs; pass the base scan or set "
                 "exact_verify=False"
             )
-        new_slim = (
-            comb.select("fid", "sha", "size", "n_lines", "band_hashes")
-            if comb is not None
-            else _slim_bands(new_full, cfg).localCheckpoint(eager=False)
-        )
         # sha-collapse within the batch AND against the base: batch
         # copies of content the base already carries ride the exact
         # star edges; only genuinely new content enters LSH
@@ -436,14 +366,9 @@ def incremental_dedupe(
         # equivalence) and emit one candidate pair per copy. The reps
         # are READ from the persisted band_reps stage (written by the
         # full run / write_state) so no batch ever pays a base-wide
-        # aggregation shuffle; the groupBy below is only the fallback
-        # for snapshots written before the stage existed.
-        if state.band_reps is not None:
-            base_reps = state.band_reps
-        else:
-            base_reps = _collapse_reps(state.bands)
+        # aggregation shuffle.
         pairs, dropped = incremental_candidate_pairs(
-            _explode(reps, cfg), _explode(base_reps, cfg), cfg
+            _explode(reps, cfg), _explode(state.band_reps, cfg), cfg
         )
         union_slim = state.bands.unionByName(new_slim)
         if cfg.mode == "simhash":
@@ -482,36 +407,21 @@ def incremental_dedupe(
     )
 
 
-def merged_state(result: IncrementalResult, state: BaseState, cfg: DedupConfig,
-                 new_raw: DataFrame | None = None) -> BaseState:
+def merged_state(result: IncrementalResult, state: BaseState, cfg: DedupConfig) -> BaseState:
     """The next snapshot's base state (caller writes it to the NEXT
     checkpoint location — never overwrite the state being read):
     files ∪ batch, bands ∪ batch bands, updated labels. The batch band
     table computed (and localCheckpointed) by ``incremental_dedupe``
-    is reused — the Arrow signature stage is never paid twice;
-    ``new_raw`` is only consulted as a fallback for results produced
-    before ``new_bands`` existed."""
-    bands = state.bands
-    band_reps = None
-    if bands is not None:
-        if result.new_bands is not None:
-            bands = _union_audit_tolerant(bands, result.new_bands)
-        elif new_raw is not None:
-            new_full = ingest(new_raw, cfg).withColumn(
-                "fid", F.concat_ws("/", "repo", "path")
-            )
-            bands = bands.unionByName(_slim_bands(new_full, cfg))
+    is reused — the Arrow signature stage is never paid twice."""
+    bands = band_reps = None
+    if state.bands is not None:
+        bands = _union_audit_tolerant(state.bands, result.new_bands)
         # roll the rep table forward WITHOUT aggregating: base reps
         # stay valid (a batch copy of an existing sha rides the exact
         # star edges, its rep identity is immaterial to labels), and
         # the batch's fresh-sha reps were already collapsed batch-side
         # by incremental_dedupe — append-only state growth, O(B) work
-        if state.band_reps is not None and result.new_band_reps is not None:
-            band_reps = _union_audit_tolerant(
-                state.band_reps, result.new_band_reps
-            )
-        else:
-            band_reps = _collapse_reps(bands)
+        band_reps = _union_audit_tolerant(state.band_reps, result.new_band_reps)
     return BaseState(
         files=_union_audit_tolerant(state.files, result.new_files),
         bands=bands,
@@ -527,19 +437,12 @@ def write_state(spark: SparkSession, state: BaseState, cfg: DedupConfig,
     run N loads from dir N-1 and writes dir N."""
     out = checkpoint_dir.rstrip("/") + "/" + cfg.fingerprint()
     state.files.write.mode("overwrite").parquet(out + "/files")
-    if state.bands is not None and cfg.mode in _BAND_STAGE:
+    if state.bands is not None and cfg.mode in BAND_STAGE:
         state.bands.write.mode("overwrite").parquet(
-            out + "/" + _BAND_STAGE[cfg.mode]
+            out + "/" + BAND_STAGE[cfg.mode]
         )
-        # persist the rep table so the NEXT batch probes it directly;
-        # computed at most once (bootstrap) — steady-state it is the
-        # prior stage plus the batch's fresh reps, no aggregation
-        reps = (
-            state.band_reps
-            if state.band_reps is not None
-            else _collapse_reps(state.bands)
-        )
-        reps.write.mode("overwrite").parquet(out + "/band_reps")
+        # persist the rep table so the NEXT batch probes it directly
+        state.band_reps.write.mode("overwrite").parquet(out + "/band_reps")
     state.labels.write.mode("overwrite").parquet(out + "/cc_labels")
 
 
@@ -860,14 +763,9 @@ def write_state_delta(
     the ``batch_id=-1`` partition of every stage."""
     store = _delta_store(spark, cfg, root)
     store.write(state.files, "files", batch_id)
-    if state.bands is not None and cfg.mode in _BAND_STAGE:
-        store.write(state.bands, _BAND_STAGE[cfg.mode], batch_id)
-        reps = (
-            state.band_reps
-            if state.band_reps is not None
-            else _collapse_reps(state.bands)
-        )
-        store.write(reps, "band_reps", batch_id)
+    if state.bands is not None and cfg.mode in BAND_STAGE:
+        store.write(state.bands, BAND_STAGE[cfg.mode], batch_id)
+        store.write(state.band_reps, "band_reps", batch_id)
     store.write(state.labels, "cc_labels", batch_id)
 
 
@@ -880,13 +778,13 @@ def append_state_delta(
     delta. Nothing base-sized is read or written."""
     store = _delta_store(spark, cfg, root)
     store.write(result.new_files, "files", batch_id)
-    if cfg.mode in _BAND_STAGE:
+    if cfg.mode in BAND_STAGE:
         if result.new_bands is None or result.new_band_reps is None:
             raise ValueError(
                 "append_state_delta needs new_bands/new_band_reps on the "
                 "result (produced by incremental_dedupe in a band mode)"
             )
-        store.write(result.new_bands, _BAND_STAGE[cfg.mode], batch_id)
+        store.write(result.new_bands, BAND_STAGE[cfg.mode], batch_id)
         store.write(result.new_band_reps, "band_reps", batch_id)
     if result.label_updates is None:
         raise ValueError("append_state_delta needs label_updates on the result")
@@ -924,8 +822,8 @@ def load_state_delta(
 
     files = rd("files", merge_schema=True).drop("batch_id")
     bands = band_reps = None
-    if cfg.mode in _BAND_STAGE:
-        bands = rd(_BAND_STAGE[cfg.mode]).drop("batch_id")
+    if cfg.mode in BAND_STAGE:
+        bands = rd(BAND_STAGE[cfg.mode]).drop("batch_id")
         band_reps = rd("band_reps").drop("batch_id")
     lab = rd("cc_labels")
     w = Window.partitionBy("fid").orderBy(F.col("batch_id").desc())
@@ -1011,7 +909,7 @@ def compact_state_delta(
     stages = [
         s for s in _DELTA_STAGES
         if s in ("files", "cc_labels", "band_reps")
-        or s == _BAND_STAGE.get(cfg.mode)
+        or s == BAND_STAGE.get(cfg.mode)
     ]
     for stage in stages:
         if not store.stage_exists(stage):

@@ -77,10 +77,9 @@ def exact_dup_pairs(files: DataFrame) -> DataFrame:
 def sha_groups(files: DataFrame) -> DataFrame:
     """ONE aggregation serving both sha-collapse and exact-dup edges
     (r6): (sha, root=min fid, n) over every row — including the NULL
-    sha group, whose winner row keeps ``collapse`` semantics identical
-    to ``collapse_sha_reps`` while the exact-edge join can never match
-    it (equality joins skip NULL keys). The pipeline previously ran
-    two independent full aggregations over the same (sha, fid) rows."""
+    sha group, whose winner row ``collapse_sha_reps`` keeps while the
+    exact-edge join can never match it (equality joins skip NULL
+    keys)."""
     return files.groupBy("sha").agg(
         F.min(F.concat_ws("/", "repo", "path")).alias("root")
         if "fid" not in files.columns
@@ -102,12 +101,14 @@ def exact_dup_pairs_from_groups(files: DataFrame, groups: DataFrame) -> DataFram
     )
 
 
-def collapse_sha_reps(bands: DataFrame) -> DataFrame:
+def collapse_sha_reps(bands: DataFrame, groups: DataFrame | None = None) -> DataFrame:
     """One representative row per distinct sha (min fid, deterministic —
     SURVEY W5): the collapse that keeps byte-identical copies out of the
-    LSH stage. One kernel, shared by the batch pipeline's band_reps
-    stage, the incremental bootstrap/fallback, and diagnostics — rep
-    selection must agree everywhere or incremental appends would probe
-    different representatives than the full run persisted."""
-    winners = bands.groupBy("sha").agg(F.min("fid").alias("fid"))
-    return bands.join(winners, "fid", "left_semi")
+    LSH stage. ``groups`` is a ``sha_groups`` table over the same rows
+    (the full run shares one with the exact-dup edges); without it the
+    groups are aggregated here (an append batch's fresh shas). One
+    kernel for both, so incremental appends probe exactly the
+    representatives the full run persisted."""
+    if groups is None:
+        groups = sha_groups(bands)
+    return bands.join(groups.select(F.col("root").alias("fid")), "fid", "left_semi")

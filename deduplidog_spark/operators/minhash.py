@@ -56,7 +56,12 @@ def make_minhash_udf(cfg: DedupConfig):
                 out.append(H.minhash_signature(sh, a, b))
         return pd.Series(out)
 
-    return minhash_sig
+    # nondeterministic for the optimizer only (the kernel is pure): a
+    # deterministic UDF lets the non-empty-array filter that explode
+    # infers be pushed through the band projection and the
+    # widen_small_scan repartition, evaluating the signature kernel a
+    # second time below the repartition, on the narrow input
+    return minhash_sig.asNondeterministic()
 
 
 def with_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -70,63 +75,6 @@ def with_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def make_minhash_band_udf(cfg: DedupConfig):
-    """Signature + banding fused into ONE Arrow UDF (r6): returns the
-    B band hashes directly instead of the num_perm-wide signature. The
-    banding kernel (functions.hashing.band_hashes_from_sigs) is
-    bit-identical to the JVM ``xxhash64`` folding in
-    ``with_band_hashes`` (regression-pinned in tests), so consumers see
-    exactly the same band values — but only B longs per row cross the
-    Python→JVM boundary (B=32 vs num_perm=128 default: 4× less Arrow
-    transfer), the JVM evaluates no 128-element banding expression,
-    and the full signature array never exists JVM-side at all. Rows
-    gated by F6 / NULL content yield NULL (no band rows), matching the
-    ``with_band_hashes`` NULL guard."""
-    k = cfg.shingle_k
-    max_size = cfg.hash_max_size
-    num_perm = cfg.num_perm
-    n_bands = cfg.lsh_bands
-    n_rows = cfg.lsh_rows
-    use_oph = cfg.minhash_impl == "oph"
-    a, b = H.minhash_params(num_perm, cfg.seed)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_bands(content: pd.Series) -> pd.Series:
-        n = len(content)
-        sigs = np.zeros((n, num_perm), dtype=np.int64)
-        ok = np.zeros(n, dtype=bool)
-        for i, text in enumerate(content):
-            if text is None or (max_size is not None and len(text) > max_size):
-                continue  # F6 hash-cost gate → never similar
-            if use_oph:
-                # no np.unique: OPH's per-bin min is multiplicity-
-                # insensitive, so the sort it paid bought nothing
-                h = H.shingle_hashes_u64(text, k)
-                sigs[i] = H.oph_signature(h, num_perm)
-            else:
-                sh = H.shingle_set_u32(text, k)
-                sigs[i] = H.minhash_signature(sh, a, b)
-            ok[i] = True
-        bands = H.band_hashes_from_sigs(sigs, n_bands, n_rows)
-        return pd.Series(
-            [bands[i] if ok[i] else None for i in range(n)]
-        )
-
-    return minhash_bands
-
-
-def with_banded_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Adds ``band_hashes`` in one fused UDF pass — the hot-path
-    equivalent of ``with_band_hashes(with_signatures(...))`` for
-    consumers that never read ``sig`` (the dedup pipeline; the
-    signature-agreement gate is not part of its verify chain)."""
-    from deduplidog_spark.ingest import widen_small_scan
-
-    return widen_small_scan(files).withColumn(
-        "band_hashes", make_minhash_band_udf(cfg)(F.col("content"))
-    )
-
-
 def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Ingest + signatures + banding in ONE ``mapInPandas`` pass over
     the raw contract table — the minhash pipeline's scan stage (r6).
@@ -136,8 +84,8 @@ def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
     (size = UTF-8 octet length, n_lines = newline count + 1, sha =
     sha256 hex, the quarantine flag) are computed in the same Python
     batch that shingles and bands the content, so content never
-    re-enters the JVM: the scalar-UDF form (``with_banded_signatures``)
-    evaluates content-bearing rows through ``ArrowEvalPython``, whose
+    re-enters the JVM: a scalar pandas UDF over content evaluates
+    content-bearing rows through ``ArrowEvalPython``, whose
     passthrough queue buffers every input row — content included —
     until its Python result returns, and the JVM then still pays
     sha256 + the line split. One pass, measured 5.4s → 1.8s for the

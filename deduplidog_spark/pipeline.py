@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
+from deduplidog_spark.fsutil import fs_exists
 from deduplidog_spark.ingest import ingest
 from deduplidog_spark.metrics import record_lineage, record_lineage_table
 from deduplidog_spark.operators import minhash as mh
@@ -53,24 +54,14 @@ class DedupResult:
     plan: DataFrame  # action-plan table
     metrics: DataFrame  # one-row counters
     dropped_buckets: DataFrame | None = None  # LSH skew-cap log
-    # the materialized slim band table + sha-collapsed reps from the
-    # fused single-scan path (r6): incremental.state_from_result reuses
-    # them so building append state off a completed in-session run
-    # never re-pays the signature UDF over the base corpus. None on the
-    # durable path (load_state reads the persisted stages instead) and
-    # for name/exact modes.
+    # the band table and its sha-collapsed reps (one row per distinct
+    # sha), set in every near-dup mode and None in name/exact modes:
+    # incremental.state_from_result reuses them, so building append
+    # state off a completed in-session run never re-pays the signature
+    # UDF over the base corpus. With a checkpoint target they are reads
+    # of the persisted `<mode>_bands` / `band_reps` stages.
     bands: DataFrame | None = None
     band_reps: DataFrame | None = None
-
-
-def _fs_exists(spark, path: str) -> bool:
-    """Marker check through the Hadoop FS API so resume works for any
-    scheme the cluster mounts (hdfs://, s3a://, file:) — ``os.path``
-    only sees the driver's local disk."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
 
 
 def _ckpt(df: DataFrame, cfg: DedupConfig, stage: str, reuse: bool = True) -> DataFrame:
@@ -114,7 +105,7 @@ def _ckpt(df: DataFrame, cfg: DedupConfig, stage: str, reuse: bool = True) -> Da
         path = run_dir + "/" + stage
         marker = path + "/_SUCCESS"
         spark = df.sparkSession
-        if not _fs_exists(spark, marker):
+        if not fs_exists(spark, marker):
             df.write.mode("overwrite").parquet(path)
             out = spark.read.parquet(path)
             record_lineage(out, run_dir, stage)  # north_rule
@@ -143,48 +134,64 @@ def _cc_materializer(cfg: DedupConfig):
     return lambda df, tag: _ckpt(df, cfg, f"cc_{tag}")
 
 
-_SLIM_STAGE = {
+# mode → the band-table stage name, for the pipeline's checkpoints and
+# the incremental state layouts alike
+BAND_STAGE = {
     "minhash": "minhash_bands",
     "simhash": "simhash_bands",
     "substring": "winnow_bands",
 }
 
 
-def _banded(files_full: DataFrame, cfg: DedupConfig):
-    """Mode-specific banded projection: (df with band columns added,
-    [band column names])."""
+def band_cols(mode: str) -> list[str]:
+    """The band columns ``banded_scan`` appends in ``mode``."""
+    return ["band_hashes", "simhash"] if mode == "simhash" else ["band_hashes"]
+
+
+def band_table(combined: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The slim band table (``<mode>_bands`` stage) of a ``banded_scan``
+    frame: (fid, sha, size, n_lines, band columns)."""
+    return combined.select("fid", "sha", "size", "n_lines", *band_cols(cfg.mode))
+
+
+def banded_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """THE scan of every near-dup run, full or incremental: the slim
+    ingested columns (everything ``ingest`` derives but ``content``)
+    plus the mode's band columns, from one pass over ``raw``.
+
+    minhash runs ingest stats, signatures and banding in one
+    ``mapInPandas`` pass (``minhash.banded_ingest_scan``, row-identical
+    to the JVM ingest + ``with_band_hashes(with_signatures(...))``);
+    simhash and substring add their JVM/UDF band columns on top of
+    ``ingest``. ``files`` (the slim audit table) and ``band_table`` are
+    column projections of this one frame."""
+    files_full = _with_fid(ingest(raw, cfg))
+    slim_cols = [c for c in files_full.columns if c != "content"]
     if cfg.mode == "minhash":
-        # fused signature+banding UDF: band values are bit-identical to
-        # the two-step with_band_hashes(with_signatures(...)) (pinned in
-        # tests) but only B longs per row cross the Python boundary
-        return mh.with_banded_signatures(files_full, cfg), ["band_hashes"]
-    if cfg.mode == "simhash":
-        return (
-            sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg),
-            ["band_hashes", "simhash"],
-        )
-    if cfg.mode == "substring":
-        return ss.with_fingerprints(files_full, cfg), ["band_hashes"]
-    raise ValueError(f"_banded: unsupported mode {cfg.mode!r}")
+        banded = _with_fid(mh.banded_ingest_scan(raw, cfg))
+    elif cfg.mode == "simhash":
+        banded = sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg)
+    elif cfg.mode == "substring":
+        banded = ss.with_fingerprints(files_full, cfg)
+    else:
+        raise ValueError(f"banded_scan: unsupported mode {cfg.mode!r}")
+    return banded.select(*slim_cols, *band_cols(cfg.mode))
 
 
 def near_dup_edges(
     files: DataFrame,
     cfg: DedupConfig,
-    slim: DataFrame | None = None,
-    reps: DataFrame | None = None,
+    slim: DataFrame,
+    reps: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate generation + verification for the selected near-dup
     mode. Returns (verified_pairs, dropped_buckets_report).
 
-    Only one representative per distinct sha enters the LSH stage; the
-    exact-dup star edges are unioned back in afterwards.
-
-    ``slim`` — optionally, the already-materialized slim band table
-    (fid, sha, size, n_lines, band cols); ``dedupe`` passes the
-    projection of its fused single-scan checkpoint so the corpus is
-    ingested+signed once, not once for the slim audit table and again
-    for the band table.
+    ``files`` carries (fid, content) for the exact-verify re-read;
+    ``slim`` is the band table (``band_table``) and ``reps`` its rows
+    for one representative fid per distinct sha. Only the reps enter
+    the LSH stage; the exact-dup star edges are unioned back in
+    afterwards.
     """
     # Shuffle-only-hashes design: signatures/bands are computed in the
     # scan stage (no shuffle carries content or even the full signature
@@ -204,33 +211,8 @@ def near_dup_edges(
         # materialization pull the chain once.
         return _ckpt(d, cfg, "lsh_buckets", reuse=False)
 
-    def _sha_reps(slim: DataFrame) -> DataFrame:
-        # one representative band row per distinct sha — persisted as
-        # its own stage so an incremental append batch probes base
-        # representatives directly instead of re-aggregating the whole
-        # base band table per batch (that re-collapse was a base-wide
-        # O(N) exchange every append; the reps are computed ONCE here).
-        # reuse=True: lsh_candidate_pairs consumes the exploded band
-        # rows TWICE (bucket-count pre-pass that builds the hot-bucket
-        # broadcast, then the pruned anti-join probe side) — left lazy,
-        # the collapse would re-execute per consumer.
-        return _ckpt(collapse_sha_reps(slim), cfg, "band_reps", reuse=True)
-
-    if cfg.mode not in _SLIM_STAGE:
+    if cfg.mode not in BAND_STAGE:
         raise ValueError(f"near_dup_edges: unsupported mode {cfg.mode!r}")
-    if slim is None:
-        # band hashes (32 longs) replace the full signature in the
-        # materialized table — ~4× smaller; the exact-Jaccard stage is
-        # the precision gate, so the signature-agreement estimate adds
-        # nothing the bands + exact verify don't already give
-        banded, extra = _banded(files, cfg)
-        slim = _ckpt(
-            banded.select("fid", "sha", "size", "n_lines", *extra),
-            cfg,
-            _SLIM_STAGE[cfg.mode],
-        )
-    if reps is None:
-        reps = _sha_reps(slim)
     band_rows = (
         ss.explode_fingerprints(reps)
         if cfg.mode == "substring"
@@ -253,7 +235,8 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
     """
     # Two views of the ingested table:
     # - files_full: lazily re-derived from the scan; carries content,
-    #   consumed exactly once by the signature/verify path;
+    #   consumed only by the exact-verify content re-read (or the name
+    #   matcher);
     # - files: slim projection (no content) materialized once — it
     #   feeds exact edges, keeper election, and metrics. Materializing
     #   content here would double the pipeline's I/O volume: content is
@@ -286,33 +269,23 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
         )
     files_full = _with_fid(ingest(raw, cfg))
     slim_cols = [c for c in files_full.columns if c != "content"]
-    durable = bool(cfg.checkpoint_dir or cfg.checkpoint_table_prefix)
-    slim = None
-    if cfg.mode in _SLIM_STAGE and not durable:
-        # FUSED single scan (r6): without a durable checkpoint target
-        # the slim audit table and the band table were each a separate
-        # localCheckpoint pulling its own full ingest pass (scan +
-        # sha256 + derived columns, plus the signature UDF on the band
-        # pass). One combined materialization computes everything in
-        # one pass over the corpus; `files` and the band-stage `slim`
-        # are column projections of the same in-memory RDD. Durable
-        # runs keep the two-stage layout — load_state/resume reads
-        # `files` and `<mode>_bands` as separate fingerprint-keyed
-        # stages, and there the extra pass buys restartability.
-        if cfg.mode == "minhash":
-            # single mapInPandas pass: ingest stats + signatures +
-            # banding in Python, path columns/filters as the shared
-            # JVM expressions on top (see minhash.banded_ingest_scan)
-            banded, extra = _with_fid(mh.banded_ingest_scan(raw, cfg)), ["band_hashes"]
-        else:
-            banded, extra = _banded(files_full, cfg)
-        combined = _ckpt(banded.select(*slim_cols, *extra), cfg, "files")
-        files = combined.select(*slim_cols)
-        slim = combined.select("fid", "sha", "size", "n_lines", *extra)
+    slim = reps = dropped = None
+    if cfg.mode in BAND_STAGE:
+        # ONE scan (banded_scan) yields both the slim audit table and
+        # the band table, as column projections of a single lazy local
+        # checkpoint: the first consuming job computes it, the second
+        # reads the cached partitions. In memory the two _ckpt calls
+        # below are no-ops (reuse=False); with a checkpoint target they
+        # persist `files` and `<mode>_bands` as the separate
+        # fingerprint-keyed stages load_state reads, and a rerun that
+        # finds both never computes the scan at all.
+        combined = banded_scan(raw, cfg).localCheckpoint(eager=False)
+        files = _ckpt(combined.select(*slim_cols), cfg, "files", reuse=False)
+        slim = _ckpt(
+            band_table(combined, cfg), cfg, BAND_STAGE[cfg.mode], reuse=False
+        )
     else:
         files = _ckpt(files_full.select(*slim_cols), cfg, "files")
-    reps = None
-    dropped = None
 
     if cfg.mode == "exact":
         edges = exact_dup_pairs(files)
@@ -354,22 +327,16 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
         metrics = run_metrics(plan, files)
         return DedupResult(files, edges, clusters, plan, metrics)
     else:
-        if slim is not None:
-            # fused path (r6): ONE sha aggregation serves both the rep
-            # collapse and the exact-dup star edges — they previously
-            # each ran a full groupBy over the same (sha, fid) rows.
-            # The group table broadcasts (AQE), so the rep semi-join
-            # and the edge join are map-side over the in-memory
-            # combined checkpoint.
-            groups = _ckpt(sha_groups(files), cfg, "sha_groups", reuse=True)
-            reps = slim.join(
-                groups.select(F.col("root").alias("fid")), "fid", "left_semi"
-            )
-            near, dropped = near_dup_edges(files_full, cfg, slim=slim, reps=reps)
-            exact = exact_dup_pairs_from_groups(files, groups)
-        else:
-            near, dropped = near_dup_edges(files_full, cfg, slim=slim, reps=reps)
-            exact = exact_dup_pairs(files)
+        # ONE sha aggregation serves both the rep collapse and the
+        # exact-dup star edges. The group table broadcasts (AQE), so the
+        # rep semi-join and the edge join are map-side over the scan's
+        # checkpoint. `band_reps` (one band row per distinct sha) is its
+        # own stage so an append batch probes base representatives
+        # directly instead of re-aggregating the base band table.
+        groups = _ckpt(sha_groups(files), cfg, "sha_groups", reuse=True)
+        reps = _ckpt(collapse_sha_reps(slim, groups), cfg, "band_reps", reuse=False)
+        near, dropped = near_dup_edges(files_full, cfg, slim, reps)
+        exact = exact_dup_pairs_from_groups(files, groups)
         # plain union, no dedup shuffle: the two edge sets are disjoint
         # by construction (exact stars connect fids SHARING a sha; near
         # edges connect sha REPRESENTATIVES, one per distinct sha, so

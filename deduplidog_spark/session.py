@@ -10,9 +10,12 @@ the DuckDB oracle.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def cpu_count() -> int:
@@ -138,7 +141,12 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
         def _warm(s: "pd.Series") -> "pd.Series":
             from deduplidog_spark.functions import hashing as H
 
-            return s.map(lambda t: int(H.shingle_hashes_u64(t, 5)[0]))
+            # masked into int64: a raw uint64 >= 2^63 only converts
+            # through Arrow's unsafe cast, and fails under
+            # spark.sql.execution.pandas.convertToArrowArraySafely
+            return s.map(
+                lambda t: int(H.shingle_hashes_u64(t, 5)[0]) & 0x7FFF_FFFF_FFFF_FFFF
+            )
 
         _warm.__annotations__ = {"s": pd.Series, "return": pd.Series}
         warm = pandas_udf(_warm, "long")
@@ -158,5 +166,9 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
         strings.mapInPandas(
             _ident, "id long, s string"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass  # prewarm is best-effort; never fail session construction
+    except Exception as e:  # best-effort: never fail session construction
+        log.warning(
+            "Python worker prewarm skipped (%s: %s); the first pandas-UDF "
+            "and mapInPandas stages will pay worker start-up",
+            type(e).__name__, e,
+        )

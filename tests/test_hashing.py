@@ -224,15 +224,12 @@ def test_vectorized_levenshtein_shared_affixes(core, edit, data):
 
 
 def test_numpy_band_hashes_match_jvm_xxhash64(spark):
-    """The fused signature+banding UDF (minhash.with_banded_signatures)
-    must produce bit-identical band values to the two-step JVM path
-    (with_band_hashes over with_signatures) — the banding replica
-    (hashing.band_hashes_from_sigs) replays catalyst XXH64.hashLong
-    folding with seed 42, including negative signature values."""
+    """The numpy banding kernel (hashing.band_hashes_from_sigs, used by
+    the fused minhash scan) must produce bit-identical band values to
+    the JVM banding of with_band_hashes: it replays catalyst
+    XXH64.hashLong folding with seed 42, including negative signature
+    values."""
     from pyspark.sql import functions as F
-
-    from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.operators import minhash as mh
 
     rng = np.random.RandomState(11)
     sig = rng.randint(-(2**63), 2**63, size=(64, 128)).astype(np.int64)
@@ -255,23 +252,3 @@ def test_numpy_band_hashes_match_jvm_xxhash64(spark):
         .tolist()
     )
     assert np.array_equal(jvm, H.band_hashes_from_sigs(sig, bands, r))
-
-    # end-to-end: fused UDF == two-step path on real text, incl. the
-    # NULL-content gate row
-    rows = [("a", "def foo(): return 1 " * 8), ("b", None), ("c", "x" * 40)]
-    files = spark.createDataFrame(rows, "fid string, content string")
-    cfg = DedupConfig(mode="minhash", shingle_k=5)
-    two_step = {
-        r["fid"]: r["band_hashes"]
-        for r in mh.with_band_hashes(mh.with_signatures(files, cfg), cfg)
-        .select("fid", "band_hashes")
-        .collect()
-    }
-    fused = {
-        r["fid"]: r["band_hashes"]
-        for r in mh.with_banded_signatures(files, cfg)
-        .select("fid", "band_hashes")
-        .collect()
-    }
-    assert fused == two_step
-    assert fused["b"] is None

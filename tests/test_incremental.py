@@ -171,7 +171,7 @@ def test_chained_appends_catch_batch_vs_batch_duplicates(spark):
 
 def test_merged_state_roundtrip(spark, incr_run):
     cfg, state, res, full, batch_raw = incr_run
-    nxt = merged_state(res, state, cfg, new_raw=batch_raw)
+    nxt = merged_state(res, state, cfg)
     assert nxt.files.count() == state.files.count() + res.new_files.count()
     assert nxt.bands.count() == state.bands.count() + res.new_files.count()
     inc = {r.fid: r.component for r in nxt.labels.collect()}
@@ -499,8 +499,8 @@ def test_quarantined_batch_rows_mint_no_band_reps(spark):
 
 def test_load_state_surfaces_corrupt_band_reps(spark, incr_run):
     """A corrupt/unreadable band_reps stage must raise, not silently
-    fall back to the per-batch base-wide aggregation; only a MISSING
-    stage (pre-round-3 snapshot) falls back."""
+    fall back to the per-batch base-wide aggregation; a MISSING stage
+    raises like any other missing stage."""
     import os
     import shutil
 
@@ -517,9 +517,12 @@ def test_load_state_surfaces_corrupt_band_reps(spark, incr_run):
     # RuntimeException via Py4J — the point is it is NOT swallowed)
     with _pytest.raises(Exception, match="[Pp]arquet"):
         load_state(spark, cfg)
-    # missing: pre-round-3 snapshot layout → clean fallback to None
+    # missing: no fallback to a base-wide collapse either
+    from pyspark.errors import AnalysisException
+
     shutil.rmtree(stage_dir)
-    assert load_state(spark, cfg).band_reps is None
+    with _pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_state(spark, cfg)
 
 
 # --- delta-chain compaction (round 5) --------------------------------------

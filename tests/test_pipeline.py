@@ -229,9 +229,9 @@ def test_corpus_c_recall_vs_brute_force(spark):
 
 def test_banded_ingest_scan_matches_jvm_path(spark):
     """The fused mapInPandas scan (ingest stats + signatures + banding
-    in Python) must be row-identical to the JVM ingest + banding UDF
-    path on every column, including the quarantine (NULL content) and
-    F6 hash-cost-gate rows."""
+    in Python) must be row-identical to the JVM ingest + signature UDF
+    + JVM banding path on every column, including the quarantine (NULL
+    content) and F6 hash-cost-gate rows."""
     from pyspark.sql import functions as F
 
     from deduplidog_spark.ingest import ingest
@@ -252,7 +252,9 @@ def test_banded_ingest_scan_matches_jvm_path(spark):
         "content string, mtime timestamp, is_symlink boolean",
     )
     cfg = DedupConfig(mode="minhash", shingle_k=5, hash_max_size=200)
-    jvm = mh.with_banded_signatures(ingest(raw, cfg), cfg).drop("content", "sig")
+    jvm = mh.with_band_hashes(
+        mh.with_signatures(ingest(raw, cfg), cfg), cfg
+    ).drop("content", "sig")
     fast = mh.banded_ingest_scan(raw, cfg)
     cols = sorted(jvm.columns)
     assert sorted(fast.columns) == cols
@@ -264,3 +266,112 @@ def test_banded_ingest_scan_matches_jvm_path(spark):
         }
 
     assert rowset(jvm) == rowset(fast)
+
+
+def _words(prefix, n):
+    # letters-only tokens: digit suffixes would create cross-vocabulary
+    # char-shingle overlap and false similarity
+    return " ".join(
+        f"{prefix}{chr(97 + i % 26)}{chr(97 + (i // 26) % 26)}" for i in range(n)
+    )
+
+
+_ALPHA = _words("alpha", 40)
+_BETA = _words("beta", 40)
+_CZECH = "Příliš žluťoučký kůň úpěl ďábelské ódy, 日本語のテキスト. " * 4
+_EQUIV_ROWS = [
+    ("r1", "a1.py", _ALPHA),
+    ("r1", "a2.py", _ALPHA + " alphatailxx alphatailyy"),
+    ("r2", "a3.py", _ALPHA + " alphatailzz"),
+    ("r1", "b1.py", _BETA),
+    ("r2", "b2.py", _BETA + " betatailxx"),
+    ("r1", "u1.py", _CZECH),  # non-ASCII near-dup pair
+    ("r2", "u2.py", _CZECH + " ještě jednou"),
+    ("r1", "c1.py", "zeta " * 30),  # exact-copy family
+    ("r2", "c2.py", "zeta " * 30),
+    ("r3", "c3.py", "zeta " * 30),
+    ("r3", "c4.py", _BETA),  # exact copy inside a near-dup cluster
+    ("r3", "null.py", None),  # quarantined
+    ("r3", "empty.py", ""),
+    ("r3", "tiny.py", "ab"),  # shorter than every shingle/gram width
+    ("r3", "lone.py", _words("omega", 40)),
+]
+_EQUIV_CFG = {
+    "minhash": dict(
+        lsh_bands=64, jaccard_threshold=0.25, sig_est_threshold=0.05,
+        size_ratio_prefilter=0.4,
+    ),
+    "simhash": dict(
+        simhash_max_hamming=8, jaccard_threshold=0.25, sig_est_threshold=0.0,
+        size_ratio_prefilter=0.4,
+    ),
+    "substring": dict(fingerprint_k=16, fingerprint_window=8),
+}
+
+
+@pytest.mark.parametrize("mode", ["minhash", "simhash", "substring"])
+def test_durable_and_in_memory_runs_agree(spark, mode):
+    """Every run goes through one scan and one stage path: in memory,
+    with a parquet checkpoint_dir and with a checkpoint_table_prefix,
+    dedupe() gives the same (fid, component, is_keeper) labels and the
+    same band table. A rerun against the same target resumes — it
+    writes no stage (the per-stage lineage log does not grow) — and
+    gives the same labels and plan."""
+    import tempfile
+    from datetime import datetime
+
+    t0 = datetime(2024, 1, 1)
+    raw = spark.createDataFrame(
+        [(r, p, "c0", "py", c, t0) for r, p, c in _EQUIV_ROWS],
+        "repo string, path string, commit string, lang string, "
+        "content string, mtime timestamp",
+    )
+    cfg = DedupConfig(mode=mode, skip_empty=False, **_EQUIV_CFG[mode])
+
+    def labels(res):
+        return sorted(
+            tuple(r)
+            for r in res.clusters.select("fid", "component", "is_keeper").collect()
+        )
+
+    def bands(res):
+        return sorted(
+            (r.fid, tuple(r.band_hashes or ()))
+            for r in res.bands.select("fid", "band_hashes").collect()
+        )
+
+    def plan(res):
+        return sorted((r.fid, r.action_effective) for r in res.plan.collect())
+
+    mem = dedupe(raw, cfg)
+    want = labels(mem)
+    comps = {}
+    for fid, comp, _keeper in want:
+        comps.setdefault(comp, set()).add(fid)
+    assert {"r1/c1.py", "r2/c2.py", "r3/c3.py"} in comps.values()
+    assert any({"r1/a1.py", "r1/a2.py"} <= m for m in comps.values())
+
+    tmp = tempfile.mkdtemp(prefix=f"equiv_{mode}_")
+    prefix = f"equiv_{mode}"
+    for target, lineage in (
+        (
+            {"checkpoint_dir": f"{tmp}/ck"},
+            lambda c: spark.read.parquet(f"{tmp}/ck/{c.fingerprint()}/_lineage"),
+        ),
+        (
+            {"checkpoint_table_prefix": prefix},
+            lambda c: spark.table(f"{prefix}_lineage").filter(
+                F.col("run") == c.fingerprint()
+            ),
+        ),
+    ):
+        dcfg = cfg.with_(**target)
+        first = dedupe(raw, dcfg)
+        assert labels(first) == want, target
+        assert first.band_reps is not None
+        assert bands(first) == bands(mem), target
+        written = lineage(dcfg).count()
+        again = dedupe(raw, dcfg)
+        assert labels(again) == want, target
+        assert plan(again) == plan(first), target
+        assert lineage(dcfg).count() == written, f"rerun rewrote a stage: {target}"
